@@ -58,22 +58,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """KG construction end-to-end on sf0.001 documents: line decomposition
     (F1) + SVO extraction (F2) + gazetteer mentions (S2 seed) → union →
     set-dedup (E2) — the materialization-ready triple set."""
-    from extremexp_knowledge_graph_spark.operators.pattern_extract import (
-        gazetteer_mentions,
-        line_triples,
-        svo_triples,
-    )
-    from extremexp_knowledge_graph_spark.schema import TRIPLE_KEY
-
-    docs = _docs(spark, SF_DEFAULT)
-    svo_docs = docs.withColumn("text", F.replace(F.col("text"), F.lit(" the "), F.lit(" is ")))
-    triples = (
-        line_triples(docs)
-        .unionByName(svo_triples(svo_docs))
-        .unionByName(gazetteer_mentions(docs, DOC_GAZETTEER))
-        .dropDuplicates(TRIPLE_KEY)
-    )
-    return triples
+    return _kg_triples(spark, SF_DEFAULT)
 
 
 # ---------------------------------------------------------------------------
@@ -125,11 +110,11 @@ def _q_kg_linked_mentions(spark, sf_dir):
 
 
 def _kg_triples(spark, sf_dir):
-    """The shared constructed-triple universe behind kg_pred_counts,
-    kg_degree_topk, and kg_pagerank — their DuckDB oracles are string-spliced
-    from ONE template (ORACLE["kg_pred_counts"]), so the Spark side must be
-    built in exactly one place too or an edit desynchronizes a query from
-    the shared oracle universe."""
+    """The one constructed-triple DAG: ``entry()``, bench.py's kg_construct
+    legs, and kg_pred_counts / kg_degree_topk / kg_pagerank — whose DuckDB
+    oracles are string-spliced from ONE template (ORACLE["kg_pred_counts"]),
+    so the Spark side must be built in exactly one place too or an edit
+    desynchronizes a query from the shared oracle universe."""
     from extremexp_knowledge_graph_spark.operators.pattern_extract import (
         gazetteer_mentions,
         line_triples,
@@ -2780,8 +2765,8 @@ agg AS (
   FROM regs
 )
 SELECT 256::INTEGER AS m, registers_seen,
-  round({am2} / (ssum + (256 - registers_seen)), 6) AS hll_estimate,
-  (SELECT count(DISTINCT event_id)::BIGINT FROM events) AS exact_distinct
+  round(CASE WHEN registers_seen = 0 THEN 0.0::DOUBLE
+             ELSE {am2} / (ssum + (256 - registers_seen)) END, 6) AS hll_estimate
 FROM agg
 """
 

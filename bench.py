@@ -31,7 +31,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from pyspark.sql import functions as F  # noqa: E402
 
 #: FROZEN round-1 query set — the cross-round comparison basis. The full
 #: suite grows as operators are added (its total is suite growth, not
@@ -50,24 +49,7 @@ def build_queries(sf_dir: str):
 
     def kg_construct(spark):
         """Full KG construction over documents (extract → triples → dedup)."""
-        from extremexp_knowledge_graph_spark.operators.pattern_extract import (
-            gazetteer_mentions,
-            line_triples,
-            svo_triples,
-        )
-        from extremexp_knowledge_graph_spark.schema import TRIPLE_KEY
-
-        from extremexp_knowledge_graph_spark.sources.util import ensure_min_parallelism
-
-        docs = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-        svo_docs = docs.withColumn("text", F.replace(F.col("text"), F.lit(" the "), F.lit(" is ")))
-        t = (
-            line_triples(docs)
-            .unionByName(svo_triples(svo_docs))
-            .unionByName(gazetteer_mentions(docs, entrymod.DOC_GAZETTEER))
-            .dropDuplicates(TRIPLE_KEY)
-        )
-        return t.count()
+        return entrymod._kg_triples(spark, sf_dir).count()
 
     def kg_papers_fixture(spark):
         """Reference-corpus mapper (the golden-parity pipeline) end-to-end."""
@@ -85,26 +67,11 @@ def build_queries(sf_dir: str):
         import shutil
         import tempfile
 
-        from extremexp_knowledge_graph_spark.operators.pattern_extract import (
-            gazetteer_mentions,
-            line_triples,
-            svo_triples,
-        )
         from extremexp_knowledge_graph_spark.plans.kg_store import write_triples
-        from extremexp_knowledge_graph_spark.schema import TRIPLE_KEY
-        from extremexp_knowledge_graph_spark.sources.util import ensure_min_parallelism
 
-        docs = ensure_min_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-        svo_docs = docs.withColumn("text", F.replace(F.col("text"), F.lit(" the "), F.lit(" is ")))
-        t = (
-            line_triples(docs)
-            .unionByName(svo_triples(svo_docs))
-            .unionByName(gazetteer_mentions(docs, entrymod.DOC_GAZETTEER))
-            .dropDuplicates(TRIPLE_KEY)
-        )
         out = tempfile.mkdtemp(prefix="bench_store_")
         try:
-            write_triples(t, out)
+            write_triples(entrymod._kg_triples(spark, sf_dir), out)
             return spark.read.parquet(out).count()
         finally:
             shutil.rmtree(out, ignore_errors=True)

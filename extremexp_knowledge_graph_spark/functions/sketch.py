@@ -41,12 +41,11 @@ def hll_alpha_m2(p: int) -> float:
 
 
 def hll_distinct(df: DataFrame, col: str, p: int = 8, salt: str = "hll") -> DataFrame:
-    """One-row DataFrame: (m, registers_seen, hll_estimate, exact_distinct).
+    """One-row DataFrame: (m, registers_seen, hll_estimate).
 
     ``p`` must be a multiple of 4 (nibble-aligned register index; 8 → 256
-    registers). ``exact_distinct`` rides along so the row self-documents
-    the sketch's accuracy — at scale you would drop it (it IS the expensive
-    distinct the sketch avoids)."""
+    registers). An empty relation estimates 0.0: with no register set the
+    raw estimator would divide by ``m`` and report α·m instead."""
     if p % 4 or not (4 <= p <= 16):
         raise ValueError("p must be a multiple of 4 in [4, 16]")
     m = 1 << p
@@ -71,18 +70,12 @@ def hll_distinct(df: DataFrame, col: str, p: int = 8, salt: str = "hll") -> Data
         F.count("*").cast("long").alias("registers_seen"),
         _sorted_fold(F.col("reg"), F.pow(F.lit(2.0), -F.col("mx"))).alias("_ssum"),
     )
-    exact = df.agg(F.countDistinct(F.col(col)).cast("long").alias("exact_distinct"))
     am2 = hll_alpha_m2(p)
-    return (
-        agg.crossJoin(exact)
-        .select(
-            F.lit(m).cast("int").alias("m"),
-            "registers_seen",
-            F.round(
-                F.lit(am2)
-                / (F.col("_ssum") + (F.lit(m) - F.col("registers_seen"))),
-                6,
-            ).alias("hll_estimate"),
-            "exact_distinct",
-        )
+    est = F.lit(am2) / (F.col("_ssum") + (F.lit(m) - F.col("registers_seen")))
+    return agg.select(
+        F.lit(m).cast("int").alias("m"),
+        "registers_seen",
+        F.round(F.when(F.col("registers_seen") == 0, F.lit(0.0)).otherwise(est), 6).alias(
+            "hll_estimate"
+        ),
     )

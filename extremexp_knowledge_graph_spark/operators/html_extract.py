@@ -25,7 +25,6 @@ import html as html_mod
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -71,7 +70,3 @@ def extract_text(html_bytes: pd.Series) -> pd.Series:
         if b is not None
         else None
     )
-
-
-def extracted_text_col(html_col: Column) -> Column:
-    return extract_text(html_col)

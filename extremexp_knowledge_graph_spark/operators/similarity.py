@@ -340,29 +340,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket string for one hyperplane table (native-expression
-    form — fine for a handful of planes; the batch path below is the scale
-    kernel)."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(w)) for w in plane]),
-                    lambda x, w: x.cast("double") * w,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
 def lsh_buckets_udf(all_planes: list[list[list[float]]]):
     """Arrow-batched kernel: all tables' sign-bit buckets in one numpy matmul.
 

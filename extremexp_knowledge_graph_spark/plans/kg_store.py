@@ -21,10 +21,13 @@ container, and nothing can be downloaded). The semantics exercised by tests
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from extremexp_knowledge_graph_spark.schema import TRIPLE_KEY
+from extremexp_knowledge_graph_spark.schema import TRIPLE_KEY, TRIPLE_SCHEMA
 
 DEFAULT_BUCKETS = 64
 DEFAULT_SALT = 16
@@ -53,8 +56,6 @@ def _recover_interrupted_compact(path: str) -> None:
     between renaming the live store to ``.old`` and the compacted directory
     into place, the store is momentarily absent at ``path`` — restore
     whichever complete copy survives (prefer the compacted one)."""
-    import os
-
     if os.path.isdir(path):
         return
     tmp = path.rstrip("/") + ".compacting"
@@ -71,9 +72,8 @@ def swap_rewrite(path: str, write_fn) -> None:
     writes the replacement table to ``<path>.compacting``, then the live
     directory is swapped out via rename (crash at any point is healed by
     ``_recover_interrupted_compact`` before the next read). One
-    implementation for every rewrite-in-place (store compaction, manifest
-    compaction/retention)."""
-    import os
+    implementation for every rewrite-in-place (store compaction, store
+    replacement, manifest retention)."""
     import shutil
 
     _recover_interrupted_compact(path)
@@ -86,20 +86,26 @@ def swap_rewrite(path: str, write_fn) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def read_table(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The one read rule for every table the pipeline keeps (store, manifest,
+    docs, linked, entity map): heal an interrupted ``swap_rewrite``, then
+    read with the table's DECLARED schema. Only an absent path reads as a
+    typed empty frame, decided by an explicit existence check: a broad
+    ``except`` would turn a failed read into "no rows" and the caller would
+    act on it (re-run a stage, re-insert a batch). The declared schema makes
+    an existing directory with no data files (a zero-row write) read as
+    empty too, and fills a column an older file lacks with NULL instead of
+    letting one file's footer decide the table's columns."""
+    _recover_interrupted_compact(path)
+    if not os.path.isdir(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_triples(spark: SparkSession, path: str) -> DataFrame:
     """A7: the store scan — replaces the SPARQL-over-HTTP result pager
-    (src/fuseki_client.py:134-153). Missing/empty table reads as an empty
-    typed frame (like an empty SQL table, not an error). Heals an
-    interrupted ``compact()`` swap before reading."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from extremexp_knowledge_graph_spark.schema import TRIPLE_SCHEMA
-
-    _recover_interrupted_compact(path)
-    try:
-        return spark.read.parquet(path).drop("subj_bucket")
-    except AnalysisException:
-        return spark.createDataFrame([], TRIPLE_SCHEMA)
+    (src/fuseki_client.py:134-153)."""
+    return read_table(spark, path, TRIPLE_SCHEMA).drop("subj_bucket")
 
 
 def merge_triples(spark: SparkSession, new_triples: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
@@ -112,21 +118,16 @@ def merge_triples(spark: SparkSession, new_triples: DataFrame, path: str, n_buck
            AND t.obj_is_iri=n.obj_is_iri AND t.obj_datatype<=>n.obj_datatype
         WHEN NOT MATCHED THEN INSERT *
     """
-    incoming = new_triples.dropDuplicates(TRIPLE_KEY)
-    try:
-        existing = read_triples(spark, path).select(*TRIPLE_KEY)
-    except Exception:
-        existing = None
-    if existing is not None:
-        # null-safe equality: obj_datatype is NULL for plain literals and a
-        # plain ON-clause would never match those rows (SQL three-valued
-        # logic), making the merge re-insert them forever
-        inc, ex = incoming.alias("inc"), existing.alias("ex")
-        cond = None
-        for k in TRIPLE_KEY:
-            c = F.col(f"inc.{k}").eqNullSafe(F.col(f"ex.{k}"))
-            cond = c if cond is None else (cond & c)
-        incoming = inc.join(ex, cond, "left_anti")
+    # null-safe equality: obj_datatype is NULL for plain literals and a
+    # plain ON-clause would never match those rows (SQL three-valued
+    # logic), making the merge re-insert them forever
+    inc = new_triples.dropDuplicates(TRIPLE_KEY).alias("inc")
+    ex = read_triples(spark, path).select(*TRIPLE_KEY).alias("ex")
+    cond = None
+    for k in TRIPLE_KEY:
+        c = F.col(f"inc.{k}").eqNullSafe(F.col(f"ex.{k}"))
+        cond = c if cond is None else (cond & c)
+    incoming = inc.join(ex, cond, "left_anti")
     # Two passes over `incoming` (count + write). Stage to disk rather than
     # localCheckpoint(): block-manager materialization of an unbounded batch
     # OOMs once the batch outgrows executor heap (seen at 100k pages), while
@@ -171,11 +172,10 @@ def compact(
     files_after).
     """
     import glob
-    import os
 
     _recover_interrupted_compact(path)
     files_before = len(glob.glob(os.path.join(path, "*", "*.parquet")))
-    df = spark.read.parquet(path)
+    df = read_table(spark, path, TRIPLE_SCHEMA)
     swap_rewrite(
         path,
         lambda tmp: (
@@ -212,7 +212,7 @@ def replace_store(
 def snapshot(spark: SparkSession, path: str, snapshot_path: str) -> str:
     """A11: backup — a full copy in the sandbox; Iceberg gives this for free
     via time-travel snapshots (no copy)."""
-    spark.read.parquet(path).write.mode("overwrite").parquet(snapshot_path)
+    read_table(spark, path, TRIPLE_SCHEMA).write.mode("overwrite").parquet(snapshot_path)
     return snapshot_path
 
 

@@ -20,104 +20,60 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from extremexp_knowledge_graph_spark.plans.kg_store import read_table, swap_rewrite
 from extremexp_knowledge_graph_spark.schema import MANIFEST_SCHEMA
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Always reads with the EXPLICIT current schema: per-file projection
-    fills columns a legacy file lacks with NULL (Iceberg-style evolution),
-    and — critically — a mixed old/new-file manifest can never lose a new
-    column (e.g. ``seq``) to whichever file's footer Spark happened to pick
-    for inference. A schemaless read followed by compaction would rewrite
-    the manifest WITHOUT the missing column, permanently."""
-    from extremexp_knowledge_graph_spark.plans.kg_store import _recover_interrupted_compact
-
-    _recover_interrupted_compact(path)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    """The manifest through ``kg_store.read_table``: always with the EXPLICIT
+    current schema, so a column a legacy file lacks (e.g. ``seq``) reads as
+    NULL instead of vanishing with whichever footer Spark would have picked
+    for inference — and a rewrite of that read can never drop it. An absent
+    manifest reads as empty ("nothing ran yet"); any other read failure
+    propagates."""
+    return read_table(spark, path, MANIFEST_SCHEMA)
 
 
-def compact_manifest(spark: SparkSession, path: str) -> tuple[int, int]:
-    """Rewrite the manifest as one right-sized file.
-
-    Every ``append_manifest`` adds a tiny parquet file; a long-lived
-    incremental deployment accumulates thousands (same failure mode as
-    store small-files, ``kg_store.compact``). The manifest is driver-scale
-    metadata (one row per stage×partition), so a single coalesced file is
-    always right-sized. Same two-rename swap + recovery discipline as the
-    store compactor. Returns (files_before, files_after).
-    """
-    import glob
-    import os
-
-    from extremexp_knowledge_graph_spark.plans.kg_store import (
-        _recover_interrupted_compact,
-        swap_rewrite,
-    )
-
-    _recover_interrupted_compact(path)
-    files_before = len(glob.glob(os.path.join(path, "*.parquet")))
-    if not files_before:
-        return 0, 0
-    # read DIRECTLY (no read_manifest): its empty-DF fallback is right for
-    # read-only callers but must never feed a rewrite — a transient read
-    # failure would otherwise replace the manifest with an empty table
-    df = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    swap_rewrite(path, lambda tmp: df.coalesce(1).write.mode("overwrite").parquet(tmp))
-    return files_before, len(glob.glob(os.path.join(path, "*.parquet")))
+def latest_rows(man: DataFrame, *keys: str) -> DataFrame:
+    """The one latest-row rule: per ``keys``, the row with the greatest
+    ``(ts, seq)``. ``seq`` breaks same-microsecond ties (and outranks a
+    clock step back); legacy rows with NULL ``seq`` sort last."""
+    w = Window.partitionBy(*keys).orderBy(F.desc("ts"), F.desc_nulls_last("seq"))
+    return man.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 def prune_manifest(spark: SparkSession, path: str) -> tuple[int, int]:
-    """Retention compaction: keep only the LATEST row (by ts, seq) per
-    (stage, partition_key, status), rewritten as one file.
+    """Retention compaction: keep only the ``latest_rows`` per (stage,
+    partition_key, status), rewritten as one file.
 
     The manifest is append-only, so a long-lived minute-trigger deployment
     grows it by stages × buckets rows per trigger even when nothing is
-    pending. Every consumer windows to the latest row: ``pending_keys`` /
-    ``stale_keys`` / ``latest_outputs`` use the latest *done* row per key,
-    ``run_stage`` asks "any done row", and ``reconcile_pending`` asks for
-    the latest row across statuses — keeping the newest row of EACH status
-    preserves all four exactly (a superseded 'started' never shadows a
-    'done', and a crash's dangling 'started' survives pruning). Row count
-    after = |distinct (stage, key, status)|, bounded regardless of trigger
-    count. Same two-rename swap discipline as ``kg_store.compact``.
-    Returns (rows_before, rows_after).
+    pending, one tiny parquet file per append. Every consumer reads
+    ``latest_rows``: ``pending_keys`` / ``stale_keys`` per key among *done*
+    rows, ``run_stage`` and ``reconcile_pending`` per key across statuses —
+    keeping the newest row of EACH status preserves all of them exactly (a
+    superseded 'started' never shadows a 'done', and a crash's dangling
+    'started' survives pruning). Row count after = |distinct (stage, key,
+    status)|, bounded regardless of trigger count, in a single file (the
+    manifest is driver-scale metadata). Same two-rename swap discipline as
+    ``kg_store.compact``. Returns (rows_before, rows_after).
     """
     import glob
     import os
 
     from pyspark.sql import Observation
-    from pyspark.sql.window import Window
 
-    from extremexp_knowledge_graph_spark.plans.kg_store import (
-        _recover_interrupted_compact,
-        swap_rewrite,
-    )
-
-    _recover_interrupted_compact(path)
+    df = read_manifest(spark, path)  # heals an interrupted swap before the check
     if not glob.glob(os.path.join(path, "*.parquet")):
         return 0, 0
     # both row metrics ride the single write job as Observations — no
-    # separate count scans (same convention as reconcile's store rewrite).
-    # Direct read, NOT read_manifest: its empty-DF fallback must never feed
-    # a rewrite (a transient read failure would erase the manifest).
+    # separate count scans (same convention as reconcile's store rewrite)
     obs_in, obs_out = Observation("prune_in"), Observation("prune_out")
-    df = (
-        spark.read.schema(MANIFEST_SCHEMA)
-        .parquet(path)
-        .observe(obs_in, F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("stage", "partition_key", "status").orderBy(
-        F.desc("ts"), F.desc_nulls_last("seq")
-    )
-    kept = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .observe(obs_out, F.count(F.lit(1)).alias("n"))
+    df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
+    kept = latest_rows(df, "stage", "partition_key", "status").observe(
+        obs_out, F.count(F.lit(1)).alias("n")
     )
     swap_rewrite(path, lambda tmp: kept.coalesce(1).write.mode("overwrite").parquet(tmp))
     return int(obs_in.get["n"]), int(obs_out.get["n"])
@@ -172,22 +128,12 @@ def pending_keys(spark: SparkSession, manifest_path: str, stage: str, keys: Data
     on-disk output reflects B. A latest row with a NULL recorded fingerprint
     is treated as matching any input (legacy rows stay done).
     """
-    from pyspark.sql.window import Window
-
-    done = (
-        read_manifest(spark, manifest_path)
-        .where((F.col("stage") == stage) & (F.col("status") == "done"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("partition_key").orderBy(
-                    F.desc("ts"), F.desc_nulls_last("seq")
-                )
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .select("partition_key", "input_fingerprint")
-    )
+    done = latest_rows(
+        read_manifest(spark, manifest_path).where(
+            (F.col("stage") == stage) & (F.col("status") == "done")
+        ),
+        "partition_key",
+    ).select("partition_key", "input_fingerprint")
     if "fp" not in keys.columns:
         return keys.join(done.select("partition_key").distinct(), "partition_key", "left_anti")
     k, d = keys.alias("k"), done.alias("d")
@@ -218,27 +164,16 @@ def stale_keys(
     partition pending only if ``stage`` has never completed it; a done row
     of ``stage`` with NULL input fingerprint matches any upstream output.
     """
-    from pyspark.sql.window import Window
-
     man = read_manifest(spark, manifest_path).where(F.col("status") == "done")
-    w = Window.partitionBy("partition_key").orderBy(F.desc("ts"), F.desc_nulls_last("seq"))
-    latest_up = (
-        man.where(F.col("stage") == upstream_stage)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("partition_key", F.col("output_fingerprint").alias("up_fp"))
-    )
+    u = latest_rows(man.where(F.col("stage") == upstream_stage), "partition_key").select(
+        "partition_key", F.col("output_fingerprint").alias("up_fp")
+    ).alias("u")
     # compare against the stage's LATEST done row per key, not any done row:
     # if a partition's input went A → B → back to A, the data on disk
     # reflects B and the stage must re-run even though an old row matches A
-    done = (
-        man.where(F.col("stage") == stage)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("partition_key", "input_fingerprint")
-        .alias("d")
-    )
-    u = latest_up.alias("u")
+    done = latest_rows(man.where(F.col("stage") == stage), "partition_key").select(
+        "partition_key", "input_fingerprint"
+    ).alias("d")
     covered = (F.col("u.partition_key") == F.col("d.partition_key")) & (
         F.col("d.input_fingerprint").isNull()
         | F.col("u.up_fp").isNull()
@@ -246,26 +181,6 @@ def stale_keys(
     )
     pend = u.join(done, covered, "left_anti").collect()
     return [(r.partition_key, r.up_fp) for r in pend]
-
-
-def latest_outputs(spark: SparkSession, manifest_path: str, stage: str) -> dict[str, str | None]:
-    """Latest recorded ``output_fingerprint`` per partition of ``stage``
-    (driver-scale dict) — the upstream side of ``stale_keys`` exposed for
-    callers that need to seed downstream bookkeeping (e.g. marking every
-    existing partition absorbed after a global stage run)."""
-    from pyspark.sql.window import Window
-
-    man = read_manifest(spark, manifest_path).where(
-        (F.col("status") == "done") & (F.col("stage") == stage)
-    )
-    w = Window.partitionBy("partition_key").orderBy(F.desc("ts"), F.desc_nulls_last("seq"))
-    rows = (
-        man.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("partition_key", "output_fingerprint")
-        .collect()
-    )
-    return {r.partition_key: r.output_fingerprint for r in rows}
 
 
 def run_stage(
@@ -279,20 +194,16 @@ def run_stage(
     """Run one resumable unit of work.
 
     ``fn() -> (rows_in, rows_out)`` does the actual read-transform-write.
-    Skips (returns None) if this (stage, partition_key) already completed;
-    otherwise records a manifest row with wall time and row metrics.
+    Skips (returns None) if this (stage, partition_key)'s latest row is
+    done; otherwise records a manifest row with wall time and row metrics.
     """
-    already = (
-        read_manifest(spark, manifest_path)
-        .where(
-            (F.col("stage") == stage)
-            & (F.col("partition_key") == partition_key)
-            & (F.col("status") == "done")
-        )
-        .limit(1)
-        .count()
-    )
-    if already:
+    latest = latest_rows(
+        read_manifest(spark, manifest_path).where(
+            (F.col("stage") == stage) & (F.col("partition_key") == partition_key)
+        ),
+        "partition_key",
+    ).collect()
+    if latest and latest[0].status == "done":
         return None
     t0 = time.monotonic()
     rows_in, rows_out = fn()

@@ -87,11 +87,6 @@ def paper_details(triples: DataFrame, title_contains: str | None = None, limit: 
     )
 
 
-def triple_count(triples: DataFrame) -> int:
-    """G6/E4 — the health-check aggregate (src/fuseki_client.py:111-132)."""
-    return triples.count()
-
-
 def count_by_predicate(triples: DataFrame) -> DataFrame:
     return triples.groupBy("pred").agg(F.count("*").cast("long").alias("n")).orderBy(F.desc("n"), F.asc("pred"))
 

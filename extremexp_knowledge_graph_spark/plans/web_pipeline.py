@@ -77,7 +77,14 @@ from extremexp_knowledge_graph_spark.operators.linker import link_mentions
 from extremexp_knowledge_graph_spark.operators.papers_to_triples import validate_triples
 from extremexp_knowledge_graph_spark.operators.pattern_extract import line_triples, svo_triples
 from extremexp_knowledge_graph_spark.plans import kg_store, manifest
-from extremexp_knowledge_graph_spark.schema import EMAP_SCHEMA, EX2, LINKED_SCHEMA, RDF_TYPE, TRIPLE_KEY
+from extremexp_knowledge_graph_spark.schema import (
+    DOCS_SCHEMA,
+    EMAP_SCHEMA,
+    EX2,
+    LINKED_SCHEMA,
+    RDF_TYPE,
+    TRIPLE_KEY,
+)
 from extremexp_knowledge_graph_spark.sources.synthetic_pages import GAZETTEER
 
 DEFAULT_URL_BUCKETS = 16
@@ -142,39 +149,13 @@ def _pending_input(
     return df.where(F.col("url_bucket").isin(pend_list)), pend_list, fps
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read a table that may legitimately hold ZERO rows: a zero-row
-    partitioned write leaves no parquet footer to infer a schema from, so an
-    empty/unreadable table reads as a typed empty frame (like an empty SQL
-    table, not an error) — e.g. a corpus slice with no gazetteer hits links
-    nothing, and the rest of the DAG must still run."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
-def _read_emap(spark: SparkSession, path: str) -> DataFrame:
-    """Entity-map read that first heals an interrupted two-rename swap
-    (reconcile_canonicalization uses the same ``.compacting`` discipline as
-    the store compactor) — otherwise a crash mid-swap would read as an
-    EMPTY map and downstream joins would silently drop every mention."""
-    from extremexp_knowledge_graph_spark.plans.kg_store import _recover_interrupted_compact
-
-    _recover_interrupted_compact(path)
-    return _read_or_empty(spark, path, EMAP_SCHEMA)
-
-
-def _read_buckets(spark: SparkSession, path: str, buckets: list[int], schema=None) -> DataFrame:
+def _read_buckets(spark: SparkSession, path: str, buckets: list[int], schema) -> DataFrame:
     """Read only the given ``url_bucket`` partitions — the filter is a
     partition-pruning predicate, so cost is O(delta), never O(store)."""
-    df = spark.read.parquet(path) if schema is None else _read_or_empty(spark, path, schema)
-    return df.where(F.col("url_bucket").isin(buckets))
+    return kg_store.read_table(spark, path, schema).where(F.col("url_bucket").isin(buckets))
 
 
-def _bucket_counts(df: DataFrame, out_col: str = "rows_out") -> dict[str, int]:
+def _bucket_counts(df: DataFrame) -> dict[str, int]:
     return {
         str(r.url_bucket): r.n
         for r in df.groupBy("url_bucket").agg(F.count("*").alias("n")).collect()
@@ -182,23 +163,17 @@ def _bucket_counts(df: DataFrame, out_col: str = "rows_out") -> dict[str, int]:
 
 
 def _readback(
-    spark: SparkSession, path: str, buckets: list[int], fp_cols: tuple[str, ...]
+    spark: SparkSession, path: str, buckets: list[int], schema, fp_cols: tuple[str, ...]
 ) -> tuple[dict[str, int], dict[str, str]]:
     """One partition-pruned pass over the just-written buckets: lineage
     counts AND output fingerprints together (this is where write-time
-    fingerprints come from — no separate scan). A stage that wrote zero
-    rows (unreadable empty table) reports empty counts/fps."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        rows = (
-            _read_buckets(spark, path, buckets)
-            .groupBy("url_bucket")
-            .agg(F.count("*").alias("n"), _fp_expr(fp_cols).alias("ofp"))
-            .collect()
-        )
-    except AnalysisException:
-        rows = []
+    fingerprints come from — no separate scan)."""
+    rows = (
+        _read_buckets(spark, path, buckets, schema)
+        .groupBy("url_bucket")
+        .agg(F.count("*").alias("n"), _fp_expr(fp_cols).alias("ofp"))
+        .collect()
+    )
     counts = {str(r.url_bucket): r.n for r in rows}
     fps = {str(r.url_bucket): r.ofp for r in rows}
     for b in buckets:  # zero-row buckets digest to the well-defined "0:0"
@@ -313,7 +288,9 @@ def run_web_pipeline(
                 .partitionBy("url_bucket")
                 .parquet(docs_path)
             )
-            out_counts, out_fps = _readback(spark, docs_path, pend, ("doc_id", "text"))
+            out_counts, out_fps = _readback(
+                spark, docs_path, pend, DOCS_SCHEMA, ("doc_id", "text")
+            )
             _record(
                 spark, man, S1, in_counts, out_counts,
                 int((time.monotonic() - t0) * 1000), list(in_counts), fps, out_fps,
@@ -328,7 +305,7 @@ def run_web_pipeline(
         pend_fp = manifest.stale_keys(spark, man, S2, S1)
         pend = [int(k) for k, _ in pend_fp]
         if pend:
-            todo = _read_buckets(spark, docs_path, pend)
+            todo = _read_buckets(spark, docs_path, pend, DOCS_SCHEMA)
             in_counts = _bucket_counts(todo)
             # n_docs from the lineage counts just taken — saves tfidf_weights
             # deriving N with its own aggregation over the tf exchange
@@ -354,7 +331,7 @@ def run_web_pipeline(
                 .parquet(linked_path)
             )
             out_counts, out_fps = _readback(
-                spark, linked_path, pend, ("doc_id", "surface", "entity_id")
+                spark, linked_path, pend, LINKED_SCHEMA, ("doc_id", "surface", "entity_id")
             )
             _record(
                 spark, man, S2, in_counts, out_counts,
@@ -365,12 +342,13 @@ def run_web_pipeline(
 
     # ---- S3 CANONICALIZE: linked surface forms → entity_map ----
     # First run: full batch canonicalization (run-once via manifest key
-    # 'global'), which also seeds the persisted signature table and marks
-    # every S2 bucket absorbed. Every run after that: an INCREMENTAL delta
-    # pass over exactly the buckets whose S2 output has no s3_absorb row —
-    # new entities match against the signature table (one columnar scan,
-    # no history re-shingling) and append to the map under the stability
-    # contract (existing assignments never rewritten; see
+    # 'global'), which also seeds the persisted signature table. Then, on
+    # every run alike, the buckets whose S2 output has no s3_absorb row are
+    # absorbed: on the first run the batch map already covers them; after
+    # it, an INCREMENTAL delta pass maps exactly their new entities against
+    # the signature table (one columnar scan, no history re-shingling) and
+    # appends to the map under the stability contract (existing assignments
+    # never rewritten; see
     # operators/canonicalize.py::canonicalize_entities_incremental).
     if S3 in stages:
         t0 = time.monotonic()
@@ -378,35 +356,23 @@ def run_web_pipeline(
             spark, man, S3, "global",
             lambda: _run_canonicalize(spark, linked_path, entity_map_path, sigs_path),
         )
+        pend_fp = manifest.stale_keys(spark, man, S3A, S2)
+        # absorb rows are pure bookkeeping (which S2 output the map has
+        # seen) — per-bucket entity counts don't exist here, and writing
+        # the delta TOTAL on every row would inflate any lineage sum by
+        # len(pend_fp); a delta's total goes on one summary row instead
+        rows = [{"stage": S3A, "partition_key": k, "input_fingerprint": fp}
+                for k, fp in pend_fp]
         n_delta = 0
-        if done is not None:
-            s2_out = manifest.latest_outputs(spark, man, S2)
-            if s2_out:
-                manifest.append_manifest(
-                    spark, man,
-                    [{"stage": S3A, "partition_key": k, "input_fingerprint": fp}
-                     for k, fp in s2_out.items()],
-                )
-        else:  # map already exists → absorb exactly the stale buckets
-            pend_fp = manifest.stale_keys(spark, man, S3A, S2)
-            if pend_fp:
-                n_delta = _run_canonicalize_delta(
-                    spark, linked_path, entity_map_path,
-                    buckets=[int(k) for k, _ in pend_fp], sigs_path=sigs_path,
-                )
-                wall = int((time.monotonic() - t0) * 1000)
-                # absorb rows are pure bookkeeping (which S2 output the map
-                # has seen) — per-bucket entity counts don't exist here, and
-                # writing the delta TOTAL on every row would inflate any
-                # lineage sum by len(pend_fp); the total goes on one
-                # summary row instead
-                manifest.append_manifest(
-                    spark, man,
-                    [{"stage": S3A, "partition_key": k, "input_fingerprint": fp}
-                     for k, fp in pend_fp]
-                    + [{"stage": S3, "partition_key": "delta",
-                        "rows_in": n_delta, "rows_out": n_delta, "wall_ms": wall}],
-                )
+        if pend_fp and done is None:  # the map predates these buckets
+            n_delta = _run_canonicalize_delta(
+                spark, linked_path, entity_map_path,
+                buckets=[int(k) for k, _ in pend_fp], sigs_path=sigs_path,
+            )
+            rows.append({"stage": S3, "partition_key": "delta", "rows_in": n_delta,
+                         "rows_out": n_delta, "wall_ms": int((time.monotonic() - t0) * 1000)})
+        if rows:
+            manifest.append_manifest(spark, man, rows)
         stats[S3] = {
             "ran": done is not None,
             "delta_entities": n_delta,
@@ -421,9 +387,9 @@ def run_web_pipeline(
         pend = [int(k) for k, _ in pend_fp]
         n_pend = len(pend)
         if n_pend:
-            todo = _read_buckets(spark, docs_path, pend)
+            todo = _read_buckets(spark, docs_path, pend, DOCS_SCHEMA)
             in_counts = _bucket_counts(todo)
-            emap = _read_emap(spark, entity_map_path)
+            emap = kg_store.read_table(spark, entity_map_path, EMAP_SCHEMA)
             # bucket filter prunes the linked scan to pending partitions; the
             # semi-join stays as the row-exact guard within them
             linked = _read_buckets(spark, linked_path, pend, LINKED_SCHEMA).join(
@@ -484,7 +450,7 @@ def _run_canonicalize(
     spark: SparkSession, linked_path: str, entity_map_path: str, sigs_path: str | None = None
 ) -> tuple[int, int]:
     ents = (
-        _read_or_empty(spark, linked_path, LINKED_SCHEMA)
+        kg_store.read_table(spark, linked_path, LINKED_SCHEMA)
         .select(F.col("entity_id"), F.col("entity_id").alias("name"))
         .distinct()
     )
@@ -523,11 +489,11 @@ def _run_canonicalize_delta(
         canonicalize_entities_incremental,
     )
 
-    linked = _read_or_empty(spark, linked_path, LINKED_SCHEMA)
+    linked = kg_store.read_table(spark, linked_path, LINKED_SCHEMA)
     if buckets is not None:
         linked = linked.where(F.col("url_bucket").isin(buckets))
     ents = linked.select(F.col("entity_id"), F.col("entity_id").alias("name")).distinct()
-    emap = _read_emap(spark, entity_map_path)
+    emap = kg_store.read_table(spark, entity_map_path, EMAP_SCHEMA)
     new_e = ents.join(emap.select("entity_id"), "entity_id", "left_anti")
     # Stage the delta once (it feeds LSH twice + the final assign); disk
     # staging, same rationale as the S4 batch (kg_store.py merge staging).
@@ -571,14 +537,12 @@ def reconcile_pending(spark: SparkSession, out_dir: str) -> bool:
     ``reconcile_canonicalization`` itself: re-clustering is deterministic,
     so the recomputed moves are a no-op against an already-rewritten store
     and the map swap completes the interrupted migration."""
-    rows = (
-        manifest.read_manifest(spark, f"{out_dir}/manifest")
-        .where(F.col("stage") == "s3_reconcile")
-        .orderBy(F.desc("ts"), F.desc_nulls_last("seq"))
-        .select("status")
-        .limit(1)
-        .collect()
-    )
+    rows = manifest.latest_rows(
+        manifest.read_manifest(spark, f"{out_dir}/manifest").where(
+            F.col("stage") == "s3_reconcile"
+        ),
+        "partition_key",
+    ).collect()
     return bool(rows) and rows[0].status == "started"
 
 
@@ -624,11 +588,11 @@ def reconcile_canonicalization(
     store_path = f"{out_dir}/triples"
     t0 = time.monotonic()
 
-    old_map = _read_emap(spark, entity_map_path)
+    old_map = kg_store.read_table(spark, entity_map_path, EMAP_SCHEMA)
     # the universe: everything currently linked plus everything ever mapped
     # (an entity whose pages were superseded keeps its assignment)
     ents = (
-        _read_or_empty(spark, linked_path, LINKED_SCHEMA)
+        kg_store.read_table(spark, linked_path, LINKED_SCHEMA)
         .select("entity_id")
         .unionByName(old_map.select("entity_id"))
         .distinct()

@@ -136,9 +136,19 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-# Derived web-pipeline relations (S2 output / S3 output) — used as typed
-# empty fallbacks when a stage legitimately produced zero rows (a zero-row
-# partitioned parquet write leaves no readable footer to infer from).
+# Derived web-pipeline relations (S1 / S2 / S3 output) — the declared
+# schemas ``kg_store.read_table`` reads them with (a zero-row partitioned
+# parquet write leaves no footer to infer one from).
+DOCS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("url_bucket", LongType()),
+    ]
+)
+
 LINKED_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

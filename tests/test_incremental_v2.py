@@ -395,15 +395,16 @@ def test_recrawl_to_zero_mentions_clears_linked(spark, tmp_path):
         )
 
     wp.run_web_pipeline(spark, one_page("ResNet uses Dropout layers"), out, n_url_buckets=4)
+    from extremexp_knowledge_graph_spark.plans.kg_store import read_table
     from extremexp_knowledge_graph_spark.schema import LINKED_SCHEMA
 
-    assert wp._read_or_empty(spark, f"{out}/linked", LINKED_SCHEMA).count() > 0
+    assert read_table(spark, f"{out}/linked", LINKED_SCHEMA).count() > 0
 
     st = wp.run_web_pipeline(
         spark, one_page("nothing notable remains on this page"), out, n_url_buckets=4
     )
     assert st[wp.S2]["pending_buckets"] == 1  # content fp re-opened the bucket
-    assert wp._read_or_empty(spark, f"{out}/linked", LINKED_SCHEMA).count() == 0
+    assert read_table(spark, f"{out}/linked", LINKED_SCHEMA).count() == 0
 
 
 def test_bucket_expr_null_keys_get_catchall_bucket(spark, tmp_path):
@@ -540,9 +541,10 @@ def test_reconcile_crash_between_store_and_map_heals(spark, tmp_path, monkeypatc
 
 def test_prune_manifest_keeps_latest_semantics(spark, tmp_path):
     """Retention compaction: prune_manifest keeps the latest row per
-    (stage, key, status); pending_keys / stale_keys / latest_outputs /
-    reconcile_pending are IDENTICAL before vs after, and the row count
-    collapses to the distinct-key bound."""
+    (stage, key, status); pending_keys / stale_keys / reconcile_pending
+    are IDENTICAL before vs after, every (stage, key, status) survives,
+    the row count collapses to the distinct-key bound, and the manifest
+    is rewritten as one parquet file."""
     out = str(tmp_path / "out")
     man = f"{out}/manifest"
     _rec(spark, man, "s1", "k1", in_fp="A", out_fp="oa1")
@@ -560,14 +562,19 @@ def test_prune_manifest_keeps_latest_semantics(spark, tmp_path):
         return (
             sorted(r.partition_key for r in mf.pending_keys(spark, man, "s1", keys).collect()),
             sorted(mf.stale_keys(spark, man, "s2", "s1")),
-            mf.latest_outputs(spark, man, "s1"),
             wp.reconcile_pending(spark, out),
         )
 
-    before = snapshot()
-    assert before[0] == ["k2"] and before[3] is True
+    def row_set():
+        return {(r.stage, r.partition_key, r.status) for r in mf.read_manifest(spark, man).collect()}
+
+    before, rows_before = snapshot(), row_set()
+    assert before[0] == ["k2"] and before[2] is True
+    assert len(glob.glob(f"{man}/*.parquet")) >= 6  # one file per append
     nb, na = mf.prune_manifest(spark, man)
     assert (nb, na) == (6, 5)  # only s1/k1's superseded row dropped
     assert snapshot() == before
+    assert row_set() == rows_before
+    assert len(glob.glob(f"{man}/*.parquet")) == 1
     # idempotent
     assert mf.prune_manifest(spark, man) == (5, 5)

@@ -96,9 +96,9 @@ def test_hll_distinct_accuracy_and_determinism(spark):
     for n in (2000, 20000, 80000):
         df = spark.range(n).select(F.concat(F.lit("key_"), F.col("id")).alias("k"))
         row = hll_distinct(df, "k").collect()[0]
+        exact = df.distinct().count()
         sigma = 1.04 / (row.m ** 0.5)
-        assert abs(row.hll_estimate - n) / n < 4 * sigma, row
-        assert row.exact_distinct == n
+        assert abs(row.hll_estimate - exact) / exact < 4 * sigma, row
 
     a = hll_distinct(
         spark.range(30000).repartition(3).select(F.col("id").cast("string").alias("k")), "k"
@@ -110,3 +110,23 @@ def test_hll_distinct_accuracy_and_determinism(spark):
 
     with _pytest.raises(ValueError):
         hll_distinct(spark.range(5).select(F.col("id").cast("string").alias("k")), "k", p=7)
+
+
+def test_hll_distinct_empty_relation_estimates_zero(spark):
+    """An empty relation sets no register; the raw estimator's denominator
+    is then m, which would report α·m distinct values. Both the sketch and
+    its DuckDB driver oracle must estimate 0.0 instead."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+    from extremexp_knowledge_graph_spark.functions.sketch import hll_distinct
+
+    empty = spark.range(0).select(F.col("id").cast("string").alias("k"))
+    row = hll_distinct(empty, "k").collect()[0]
+    assert (row.m, row.registers_seen, row.hll_estimate) == (256, 0, 0.0)
+
+    con = duckdb.connect()
+    con.sql("create table events (event_id BIGINT)")
+    oracle = con.sql(entrymod.oracle_sql()["sketch_hll_distinct"]).fetchall()
+    assert oracle == [(256, 0, 0.0)]

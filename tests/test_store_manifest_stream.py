@@ -34,6 +34,38 @@ def test_store_merge_idempotent(spark, tmp_path):
     assert kg_store.read_triples(spark, path).count() == 3
 
 
+def test_store_files_missing_nullable_column(spark, tmp_path):
+    """A store whose files predate the nullable ``obj_datatype`` column
+    reads it as NULL (the declared schema), so merging the same triples
+    again matches them and inserts nothing — a read that cannot see the
+    column must never make the merge skip its anti-join. Compacting the
+    mixed-file store keeps a newer typed literal's datatype."""
+    path = str(tmp_path / "triples")
+    t = _triples_df(spark, [("s1", "p", "o1"), ("s2", "p", "o2")])
+    kg_store.write_triples(t.drop("obj_datatype"), path, n_buckets=2)
+    assert kg_store.merge_triples(spark, t, path) == 0
+    assert kg_store.read_triples(spark, path).count() == 2
+    typed = [("s3", "p", "v", False, "xsd:string", None)]
+    assert kg_store.merge_triples(spark, spark.createDataFrame(typed, TRIPLE_SCHEMA), path) == 1
+    kg_store.compact(spark, path, n_buckets=2)
+    back = kg_store.read_triples(spark, path)
+    assert back.count() == 3
+    assert back.where(F.col("subj") == "s3").first().obj_datatype == "xsd:string"
+
+
+def test_read_table_absent_or_dataless_is_typed_empty(spark, tmp_path):
+    """Only an absent path, or a directory with no data files (a zero-row
+    write leaves just ``_SUCCESS``, no footer to infer a schema from),
+    reads as an empty frame — typed by the table's declared schema."""
+    absent, dataless = str(tmp_path / "never_written"), str(tmp_path / "zero_rows")
+    os.makedirs(dataless)
+    open(os.path.join(dataless, "_SUCCESS"), "w").close()
+    for path in (absent, dataless):
+        df = kg_store.read_table(spark, path, TRIPLE_SCHEMA)
+        assert df.count() == 0 and df.columns == TRIPLE_SCHEMA.names, path
+        assert kg_store.read_triples(spark, path).columns == TRIPLE_SCHEMA.names
+
+
 def test_store_layout_buckets(spark, tmp_path):
     path = str(tmp_path / "triples")
     t = _triples_df(spark, [(f"s{i}", "p", f"o{i}") for i in range(50)])
@@ -182,13 +214,17 @@ def test_compact_crash_recovery(spark, tmp_path):
 
 
 def test_manifest_compaction(spark, tmp_path):
+    """Manifest compaction is ``prune_manifest``: six appends of distinct
+    keys (one parquet file each) are rewritten as one file, row set kept."""
     mpath = str(tmp_path / "cman")
     for i in range(6):
         manifest.append_manifest(
             spark, mpath, [{"stage": "s1", "partition_key": str(i), "rows_in": 1, "rows_out": 1}]
         )
     rows_before = {(r.stage, r.partition_key) for r in manifest.read_manifest(spark, mpath).collect()}
-    fb, fa = manifest.compact_manifest(spark, mpath)
+    fb = len([f for f in os.listdir(mpath) if f.endswith(".parquet")])
+    assert manifest.prune_manifest(spark, mpath) == (6, 6)
+    fa = len([f for f in os.listdir(mpath) if f.endswith(".parquet")])
     assert fb >= 6 and fa == 1, (fb, fa)
     rows_after = {(r.stage, r.partition_key) for r in manifest.read_manifest(spark, mpath).collect()}
     assert rows_after == rows_before and len(rows_after) == 6
