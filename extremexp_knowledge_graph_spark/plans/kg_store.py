@@ -88,14 +88,15 @@ def swap_rewrite(path: str, write_fn) -> None:
 
 def read_table(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """The one read rule for every table the pipeline keeps (store, manifest,
-    docs, linked, entity map): heal an interrupted ``swap_rewrite``, then
-    read with the table's DECLARED schema. Only an absent path reads as a
-    typed empty frame, decided by an explicit existence check: a broad
-    ``except`` would turn a failed read into "no rows" and the caller would
-    act on it (re-run a stage, re-insert a batch). The declared schema makes
-    an existing directory with no data files (a zero-row write) read as
-    empty too, and fills a column an older file lacks with NULL instead of
-    letting one file's footer decide the table's columns."""
+    docs, linked, entity map, entity signatures, streaming pages): heal an
+    interrupted ``swap_rewrite``, then read with the table's DECLARED schema.
+    Only an absent path reads as a typed empty frame, decided by an explicit
+    existence check: a broad ``except`` would turn a failed read into "no
+    rows" and the caller would act on it (re-run a stage, re-insert a
+    batch). The declared schema makes an existing directory with no data
+    files (a zero-row write) read as empty too, and fills a column an older
+    file lacks with NULL instead of letting one file's footer decide the
+    table's columns."""
     _recover_interrupted_compact(path)
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)

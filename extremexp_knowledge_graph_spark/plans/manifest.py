@@ -52,7 +52,7 @@ def prune_manifest(spark: SparkSession, path: str) -> tuple[int, int]:
     grows it by stages × buckets rows per trigger even when nothing is
     pending, one tiny parquet file per append. Every consumer reads
     ``latest_rows``: ``pending_keys`` / ``stale_keys`` per key among *done*
-    rows, ``run_stage`` and ``reconcile_pending`` per key across statuses —
+    rows, ``web_pipeline.reconcile_pending`` per key across statuses —
     keeping the newest row of EACH status preserves all of them exactly (a
     superseded 'started' never shadows a 'done', and a crash's dangling
     'started' survives pruning). Row count after = |distinct (stage, key,
@@ -87,7 +87,10 @@ def _next_seq() -> int:
     """Process-monotonic append sequence: strictly increasing even when two
     appends share a wall-clock microsecond, and never retrograde under clock
     adjustment (wall-clock ns is only a floor). Latest-row selection orders
-    by (ts, seq) so it is total-ordered independent of clock resolution."""
+    by (ts, seq) so it is total-ordered independent of clock resolution.
+
+    Monotonic within ONE process only: see ``append_manifest``'s
+    single-writer assumption."""
     global _last_seq
     with _seq_lock:
         _last_seq = max(_last_seq + 1, time.time_ns())
@@ -95,6 +98,14 @@ def _next_seq() -> int:
 
 
 def append_manifest(spark: SparkSession, path: str, rows: list[dict]) -> None:
+    """Append ``rows`` (missing fields NULL, ``status`` defaulting to done).
+
+    Single-writer assumption: one driver process appends to a manifest at a
+    time. ``seq`` is ordered only within a process (``_next_seq``), so two
+    processes appending to the same manifest can write equal or crossed
+    ``(ts, seq)`` pairs and ``latest_rows`` could then pick either row. A
+    multi-writer deployment needs a writer id as the final tiebreak, or a
+    table format with serialized commits."""
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     full = [
         {
@@ -117,10 +128,9 @@ def append_manifest(spark: SparkSession, path: str, rows: list[dict]) -> None:
 def pending_keys(spark: SparkSession, manifest_path: str, stage: str, keys: DataFrame) -> DataFrame:
     """Anti-join input partition keys against completed manifest rows.
 
-    ``keys``: column ``partition_key``, plus optionally a column ``fp`` — the
-    partition's CURRENT input fingerprint. Without ``fp``, a key is pending
-    iff it has no done row (pure resume). With ``fp``, a key is also pending
-    when its LATEST done row recorded a DIFFERENT fingerprint — i.e. the
+    ``keys``: columns ``partition_key`` and ``fp`` — the partition's CURRENT
+    input fingerprint. A key is pending when it has no done row, or when
+    its LATEST done row recorded a DIFFERENT fingerprint — i.e. the
     partition's input changed since it last completed, so incremental ingest
     re-opens exactly the changed partitions (downstream overwrite/set-merge
     semantics make re-running safe). Only the latest row counts: an input
@@ -134,8 +144,6 @@ def pending_keys(spark: SparkSession, manifest_path: str, stage: str, keys: Data
         ),
         "partition_key",
     ).select("partition_key", "input_fingerprint")
-    if "fp" not in keys.columns:
-        return keys.join(done.select("partition_key").distinct(), "partition_key", "left_anti")
     k, d = keys.alias("k"), done.alias("d")
     cond = (F.col("k.partition_key") == F.col("d.partition_key")) & (
         F.col("d.input_fingerprint").isNull()
@@ -181,46 +189,3 @@ def stale_keys(
     )
     pend = u.join(done, covered, "left_anti").collect()
     return [(r.partition_key, r.up_fp) for r in pend]
-
-
-def run_stage(
-    spark: SparkSession,
-    manifest_path: str,
-    stage: str,
-    partition_key: str,
-    fn,
-    input_fingerprint: str | None = None,
-) -> tuple[int, int] | None:
-    """Run one resumable unit of work.
-
-    ``fn() -> (rows_in, rows_out)`` does the actual read-transform-write.
-    Skips (returns None) if this (stage, partition_key)'s latest row is
-    done; otherwise records a manifest row with wall time and row metrics.
-    """
-    latest = latest_rows(
-        read_manifest(spark, manifest_path).where(
-            (F.col("stage") == stage) & (F.col("partition_key") == partition_key)
-        ),
-        "partition_key",
-    ).collect()
-    if latest and latest[0].status == "done":
-        return None
-    t0 = time.monotonic()
-    rows_in, rows_out = fn()
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    append_manifest(
-        spark,
-        manifest_path,
-        [
-            {
-                "stage": stage,
-                "partition_key": partition_key,
-                "input_fingerprint": input_fingerprint,
-                "rows_in": rows_in,
-                "rows_out": rows_out,
-                "wall_ms": wall_ms,
-                "status": "done",
-            }
-        ],
-    )
-    return rows_in, rows_out

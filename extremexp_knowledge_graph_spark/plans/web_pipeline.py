@@ -46,13 +46,16 @@ A crash between write and manifest append cannot duplicate anything
 (dynamic partition overwrite for S1/S2, set-merge for S4, anti-join
 append for S3).
 
-S3 is a single global unit on FIRST run (connected components is a
-cross-bucket fixpoint); after the map exists, per-bucket ``s3_absorb``
-rows track which linked output each delta pass has absorbed, and the
-incremental pass matches only new entities against the persisted MinHash
-signature table (``entity_sigs`` — append-only, maintained here) instead of
-re-shingling the history (operators/canonicalize.py stability contract;
-bridge-merges deferred to ``reconcile_canonicalization``).
+S3 has one path: per-bucket ``s3_absorb`` rows track which linked output
+the entity map has absorbed, and each run's incremental pass maps only the
+entities of the unabsorbed buckets that the map lacks, matching them
+against the persisted MinHash signature table (``entity_sigs`` —
+append-only, maintained here) instead of re-shingling the history
+(operators/canonicalize.py stability contract; bridge-merges deferred to
+``reconcile_canonicalization``). The first run is that same pass over an
+absent (typed empty) map and signature table: with no history to adopt
+from, every entity gets the min id of its component, which is exactly the
+batch ``canonicalize_entities`` result.
 
 Note on supersession: a re-crawled page's updated text re-extracts,
 re-links and re-materializes (the bucket re-opens), but the triple STORE is
@@ -71,7 +74,10 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from extremexp_knowledge_graph_spark.operators.canonicalize import canonicalize_entities
+from extremexp_knowledge_graph_spark.operators.canonicalize import (
+    canonicalize_entities,
+    canonicalize_entities_incremental,
+)
 from extremexp_knowledge_graph_spark.operators.html_extract import extract_text
 from extremexp_knowledge_graph_spark.operators.linker import link_mentions
 from extremexp_knowledge_graph_spark.operators.papers_to_triples import validate_triples
@@ -83,6 +89,7 @@ from extremexp_knowledge_graph_spark.schema import (
     EX2,
     LINKED_SCHEMA,
     RDF_TYPE,
+    SIGS_SCHEMA,
     TRIPLE_KEY,
 )
 from extremexp_knowledge_graph_spark.sources.synthetic_pages import GAZETTEER
@@ -341,43 +348,34 @@ def run_web_pipeline(
         stats[S2] = {"pending_buckets": len(pend), "wall_s": round(time.monotonic() - t0, 3)}
 
     # ---- S3 CANONICALIZE: linked surface forms → entity_map ----
-    # First run: full batch canonicalization (run-once via manifest key
-    # 'global'), which also seeds the persisted signature table. Then, on
-    # every run alike, the buckets whose S2 output has no s3_absorb row are
-    # absorbed: on the first run the batch map already covers them; after
-    # it, an INCREMENTAL delta pass maps exactly their new entities against
-    # the signature table (one columnar scan, no history re-shingling) and
-    # appends to the map under the stability contract (existing assignments
-    # never rewritten; see
-    # operators/canonicalize.py::canonicalize_entities_incremental).
+    # On every run alike, the buckets whose S2 output has no s3_absorb row
+    # are absorbed: an INCREMENTAL pass maps exactly their entities the map
+    # lacks against the signature table (one columnar scan, no history
+    # re-shingling) and appends to the map under the stability contract
+    # (existing assignments never rewritten; see
+    # operators/canonicalize.py::canonicalize_entities_incremental). The
+    # first run is the same pass over an absent map.
     if S3 in stages:
         t0 = time.monotonic()
-        done = manifest.run_stage(
-            spark, man, S3, "global",
-            lambda: _run_canonicalize(spark, linked_path, entity_map_path, sigs_path),
-        )
         pend_fp = manifest.stale_keys(spark, man, S3A, S2)
-        # absorb rows are pure bookkeeping (which S2 output the map has
-        # seen) — per-bucket entity counts don't exist here, and writing
-        # the delta TOTAL on every row would inflate any lineage sum by
-        # len(pend_fp); a delta's total goes on one summary row instead
-        rows = [{"stage": S3A, "partition_key": k, "input_fingerprint": fp}
-                for k, fp in pend_fp]
         n_delta = 0
-        if pend_fp and done is None:  # the map predates these buckets
+        if pend_fp:
             n_delta = _run_canonicalize_delta(
                 spark, linked_path, entity_map_path,
-                buckets=[int(k) for k, _ in pend_fp], sigs_path=sigs_path,
+                [int(k) for k, _ in pend_fp], sigs_path,
             )
-            rows.append({"stage": S3, "partition_key": "delta", "rows_in": n_delta,
-                         "rows_out": n_delta, "wall_ms": int((time.monotonic() - t0) * 1000)})
-        if rows:
-            manifest.append_manifest(spark, man, rows)
-        stats[S3] = {
-            "ran": done is not None,
-            "delta_entities": n_delta,
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
+            # absorb rows are pure bookkeeping (which S2 output the map has
+            # seen) — per-bucket entity counts don't exist here, and writing
+            # the delta TOTAL on every row would inflate any lineage sum by
+            # len(pend_fp); the total goes on one summary row instead
+            manifest.append_manifest(
+                spark, man,
+                [{"stage": S3A, "partition_key": k, "input_fingerprint": fp}
+                 for k, fp in pend_fp]
+                + [{"stage": S3, "partition_key": "delta", "rows_in": n_delta,
+                    "rows_out": n_delta, "wall_ms": int((time.monotonic() - t0) * 1000)}],
+            )
+        stats[S3] = {"delta_entities": n_delta, "wall_s": round(time.monotonic() - t0, 3)}
 
     # ---- S4 MATERIALIZE: triples w/ canonical IRIs → merge into store ----
     # Staleness vs S1's docs fingerprints (content-sensitive), metadata-only.
@@ -446,52 +444,28 @@ def _entity_band_rows(entities: DataFrame) -> DataFrame:
     )
 
 
-def _run_canonicalize(
-    spark: SparkSession, linked_path: str, entity_map_path: str, sigs_path: str | None = None
-) -> tuple[int, int]:
-    ents = (
-        kg_store.read_table(spark, linked_path, LINKED_SCHEMA)
-        .select(F.col("entity_id"), F.col("entity_id").alias("name"))
-        .distinct()
-    )
-    n_in = ents.count()
-    emap = canonicalize_entities(
-        ents, id_col="entity_id", name_col="name", threshold=CANON_THRESHOLD,
-        num_hashes=CANON_NUM_HASHES, bands=CANON_BANDS, shingle_n=CANON_SHINGLE_N,
-    )
-    emap.write.mode("overwrite").parquet(entity_map_path)
-    if sigs_path:
-        _entity_band_rows(ents).write.mode("overwrite").parquet(sigs_path)
-    return n_in, spark.read.parquet(entity_map_path).count()
-
-
 def _run_canonicalize_delta(
     spark: SparkSession,
     linked_path: str,
     entity_map_path: str,
-    buckets: list[int] | None = None,
-    sigs_path: str | None = None,
+    buckets: list[int],
+    sigs_path: str,
 ) -> int:
-    """Incremental S3: assign canonical ids to entities linked since the map
-    was built; append-only (idempotent — the delta is an anti-join against
-    the map, so a re-run after a crash mid-append just shrinks to the
-    remainder). Returns the number of newly mapped entities.
+    """Incremental S3: assign canonical ids to the entities of the linked
+    ``buckets`` that the map lacks; append-only (idempotent — the delta is
+    an anti-join against the map, so a re-run after a crash mid-append just
+    shrinks to the remainder). Returns the number of newly mapped entities.
 
     Scale shape: ``buckets`` restricts the linked scan to the partitions
-    whose output the map has not absorbed (partition-pruned; None = full
-    scan, the manifest-less fallback). The history side is the entity map
-    itself (entity ids ARE the surface forms) plus — when ``sigs_path``
-    exists — the persisted signature table, so NOTHING corpus-sized is
-    re-read and nothing history-sized is re-shingled per batch. New
-    entities' signatures append to the table after assignment (idempotent
-    via anti-join on id, so either crash ordering heals)."""
-    from extremexp_knowledge_graph_spark.operators.canonicalize import (
-        canonicalize_entities_incremental,
-    )
-
-    linked = kg_store.read_table(spark, linked_path, LINKED_SCHEMA)
-    if buckets is not None:
-        linked = linked.where(F.col("url_bucket").isin(buckets))
+    whose output the map has not absorbed (partition-pruned). The history
+    side is the entity map itself (entity ids ARE the surface forms) plus
+    the persisted signature table, so NOTHING corpus-sized is re-read and
+    nothing history-sized is re-shingled per batch. Both read as typed empty
+    before their first write, which makes the first run a batch
+    canonicalization of every entity. New entities' signatures append to
+    the table after assignment (idempotent via anti-join on id, so either
+    crash ordering heals)."""
+    linked = _read_buckets(spark, linked_path, buckets, LINKED_SCHEMA)
     ents = linked.select(F.col("entity_id"), F.col("entity_id").alias("name")).distinct()
     emap = kg_store.read_table(spark, entity_map_path, EMAP_SCHEMA)
     new_e = ents.join(emap.select("entity_id"), "entity_id", "left_anti")
@@ -507,23 +481,16 @@ def _run_canonicalize_delta(
         # history = the map itself (entity_id doubles as the surface form);
         # no linked re-scan — verification only reads candidate rows anyway
         old_e = emap.select("entity_id", F.col("entity_id").alias("name"))
-        sigs = None
-        if sigs_path and os.path.isdir(sigs_path):
-            sigs = spark.read.parquet(sigs_path)
+        sigs = kg_store.read_table(spark, sigs_path, SIGS_SCHEMA)
         delta = canonicalize_entities_incremental(
             new_e, old_e, emap, id_col="entity_id", name_col="name",
             threshold=CANON_THRESHOLD, num_hashes=CANON_NUM_HASHES,
             bands=CANON_BANDS, shingle_n=CANON_SHINGLE_N,
             existing_band_rows=sigs,
         )
-        if sigs_path:
-            new_rows = _entity_band_rows(new_e)
-            if os.path.isdir(sigs_path):
-                seen = spark.read.parquet(sigs_path).select("id").distinct()
-                new_rows = new_rows.join(seen, "id", "left_anti")
-                new_rows.write.mode("append").parquet(sigs_path)
-            else:
-                new_rows.write.mode("overwrite").parquet(sigs_path)
+        _entity_band_rows(new_e).join(
+            sigs.select("id").distinct(), "id", "left_anti"
+        ).write.mode("append").parquet(sigs_path)
         delta.write.mode("append").parquet(entity_map_path)
         return spark.read.parquet(staging).count()
     finally:
@@ -562,8 +529,8 @@ def reconcile_canonicalization(
     (extremexp_kg_matic/src/main.py:180-192); at 100 TB this must be a
     targeted migration instead:
 
-    1. re-cluster ALL known entities from scratch (the same batch operator
-       and blocking parameters the first S3 run used);
+    1. re-cluster ALL known entities from scratch (the batch operator,
+       with S3's blocking parameters);
     2. diff the new map against the old → a ``moves(old_canonical,
        new_canonical)`` relation. Moves are FUNCTIONAL (one new canonical
        per old): every old group was formed from similarity edges that

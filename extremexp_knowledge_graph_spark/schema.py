@@ -136,6 +136,9 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+#: the streaming front door's cumulative pages table, partitioned by bucket
+BUCKETED_PAGES_SCHEMA = StructType([*PAGES_SCHEMA.fields, StructField("url_bucket", LongType())])
+
 # Derived web-pipeline relations (S1 / S2 / S3 output) — the declared
 # schemas ``kg_store.read_table`` reads them with (a zero-row partitioned
 # parquet write leaves no footer to infer one from).
@@ -163,6 +166,15 @@ EMAP_SCHEMA = StructType(
     [
         StructField("entity_id", StringType()),
         StructField("canonical_id", StringType()),
+    ]
+)
+
+#: S3's persisted banded MinHash signatures (``dedup.minhash_band_rows``)
+SIGS_SCHEMA = StructType(
+    [
+        StructField("id", StringType()),
+        StructField("band", IntegerType()),
+        StructField("band_sig", StringType()),
     ]
 )
 

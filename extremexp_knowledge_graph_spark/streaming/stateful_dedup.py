@@ -124,6 +124,11 @@ def stream_exact_dedup(
     fresh survivor). Default None = exact dedup over all history, state
     O(distinct fingerprints) — fine for bounded backfills, unbounded on an
     infinite stream; pick the TTL to match your dedup horizon.
+
+    A query with ``state_ttl_ms`` set does not end by itself, even with
+    ``available_now``: it keeps running no-data micro-batches (about one a
+    second) to fire processing-time timeouts, so the caller must stop it
+    (``q.stop()``) once its input is processed.
     """
     raw = (
         spark.readStream.schema(DOCS_SCHEMA)

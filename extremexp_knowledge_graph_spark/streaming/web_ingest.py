@@ -36,13 +36,14 @@ test mode); omit for the continuous watcher (A5).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from extremexp_knowledge_graph_spark.plans.web_pipeline import _bucketed, run_web_pipeline
-from extremexp_knowledge_graph_spark.schema import PAGES_SCHEMA
+from extremexp_knowledge_graph_spark.plans.web_pipeline import (
+    _bucketed,
+    _read_buckets,
+    run_web_pipeline,
+)
+from extremexp_knowledge_graph_spark.schema import BUCKETED_PAGES_SCHEMA, PAGES_SCHEMA
 
 
 def stream_pages_pipeline(
@@ -79,23 +80,14 @@ def stream_pages_pipeline(
         touched = [r.url_bucket for r in batch.select("url_bucket").distinct().collect()]
         if not touched:
             return
-        # Existence must be an explicit check, not a broad except: treating
-        # a transient read failure as "first batch" would skip the upsert's
-        # old-row side and duplicate urls forever. Any real read error
+        # url-keyed upsert: batch rows win (new urls insert, re-crawled urls
+        # replace — the content change then flows through S1's content
+        # fingerprint); untouched rows of the bucket carry over. An absent
+        # table reads as typed empty (first batch); any real read error
         # propagates so the micro-batch retries (foreachBatch is
         # at-least-once; the rewrite below is idempotent).
-        if os.path.isdir(pages_path):
-            existing = spark.read.parquet(pages_path).where(
-                F.col("url_bucket").isin(touched)  # partition-pruned
-            )
-            # url-keyed upsert: batch rows win (new urls insert, re-crawled
-            # urls replace — the content change then flows through S1's
-            # content fingerprint); untouched rows of the bucket carry over.
-            merged = existing.join(
-                batch.select("url"), "url", "left_anti"
-            ).unionByName(batch)
-        else:
-            merged = batch
+        existing = _read_buckets(spark, pages_path, touched, BUCKETED_PAGES_SCHEMA)
+        merged = existing.join(batch.select("url"), "url", "left_anti").unionByName(batch)
         # one task (→ one file) per bucket: the rewrite IS the compaction
         (
             merged.repartition(max(1, len(touched)), "url_bucket")
@@ -106,7 +98,7 @@ def stream_pages_pipeline(
         )
         run_web_pipeline(
             spark,
-            spark.read.parquet(pages_path).where(F.col("url_bucket").isin(touched)),
+            _read_buckets(spark, pages_path, touched, BUCKETED_PAGES_SCHEMA),
             out_dir,
             n_url_buckets=n_url_buckets,
             bucket_expr=bucket_expr,

@@ -7,6 +7,8 @@ in LATER batches (or after a checkpointed restart) emit nothing.
 
 from __future__ import annotations
 
+import time
+
 from extremexp_knowledge_graph_spark.streaming.stateful_dedup import (
     DOCS_SCHEMA,
     stream_exact_dedup,
@@ -15,6 +17,20 @@ from extremexp_knowledge_graph_spark.streaming.stateful_dedup import (
 
 def _write(spark, inp, rows):
     spark.createDataFrame(rows, DOCS_SCHEMA).repartition(1).write.mode("append").parquet(inp)
+
+
+def _drain_and_stop(q, n_rows, timeout_s=120):
+    """Wait until ``q`` has processed ``n_rows`` input rows, then stop it.
+    A query with ``state_ttl_ms`` set keeps running no-data micro-batches
+    for its timeouts and never ends by itself, even under availableNow."""
+    deadline = time.monotonic() + timeout_s
+    try:
+        while sum(p["numInputRows"] for p in q.recentProgress) < n_rows:
+            assert q.isActive, q.exception()
+            assert time.monotonic() < deadline, f"{n_rows} input rows not processed"
+            time.sleep(0.2)
+    finally:
+        q.stop()
 
 
 def test_stream_dedup_across_batches_and_restart(spark, tmp_path):
@@ -62,15 +78,13 @@ def test_stream_dedup_ttl_expiry_and_readmission(spark, tmp_path):
     """With state_ttl_ms set, a fingerprint idle past the TTL is forgotten
     at the next batch that sees no data for it, and a later duplicate is
     re-admitted as a fresh survivor (bounded-state trade)."""
-    import time
-
     inp, out, ckpt = (str(tmp_path / d) for d in ("inp", "out", "ckpt"))
     ttl = 500
 
     # run 1: A(1) admitted
     _write(spark, inp, [(1, "alpha text")])
     q = stream_exact_dedup(spark, inp, out, ckpt, state_ttl_ms=ttl)
-    q.awaitTermination(180)
+    _drain_and_stop(q, 1)
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1}
 
     # run 2 after the deadline: a batch with unrelated data fires A's
@@ -78,7 +92,7 @@ def test_stream_dedup_ttl_expiry_and_readmission(spark, tmp_path):
     time.sleep(1.5)
     _write(spark, inp, [(2, "bravo text")])
     q2 = stream_exact_dedup(spark, inp, out, ckpt, state_ttl_ms=ttl)
-    q2.awaitTermination(180)
+    _drain_and_stop(q2, 1)
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
 
     # run 3: duplicate of A arrives after expiry → re-admitted. (B's 500 ms
@@ -86,14 +100,14 @@ def test_stream_dedup_ttl_expiry_and_readmission(spark, tmp_path):
     # out here too; covered by run 4.)
     _write(spark, inp, [(9, "alpha text")])
     q3 = stream_exact_dedup(spark, inp, out, ckpt, state_ttl_ms=ttl)
-    q3.awaitTermination(180)
+    _drain_and_stop(q3, 1)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == {1, 2, 9}, got
 
     # run 4 (long TTL): expired B re-admitted; fresh E admitted
     _write(spark, inp, [(10, "bravo text"), (20, "echo text")])
     q4 = stream_exact_dedup(spark, inp, out, ckpt, state_ttl_ms=600_000)
-    q4.awaitTermination(180)
+    _drain_and_stop(q4, 2)
     got2 = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got2 == {1, 2, 9, 10, 20}, got2
 
@@ -101,6 +115,6 @@ def test_stream_dedup_ttl_expiry_and_readmission(spark, tmp_path):
     # restart (state + deadlines persist via the checkpoint)
     _write(spark, inp, [(21, "echo text"), (22, "bravo text")])
     q5 = stream_exact_dedup(spark, inp, out, ckpt, state_ttl_ms=600_000)
-    q5.awaitTermination(180)
+    _drain_and_stop(q5, 2)
     got3 = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got3 == {1, 2, 9, 10, 20}, got3

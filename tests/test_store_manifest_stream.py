@@ -109,22 +109,16 @@ def test_clear_removes_crash_siblings(spark, tmp_path):
 
 def test_manifest_resume(spark, tmp_path):
     mpath = str(tmp_path / "manifest")
-    calls = []
-
-    def work():
-        calls.append(1)
-        return (10, 20)
-
-    r1 = manifest.run_stage(spark, mpath, "extract", "file_a", work)
-    assert r1 == (10, 20) and len(calls) == 1
-    # second run of the same partition: skipped, no recompute
-    r2 = manifest.run_stage(spark, mpath, "extract", "file_a", work)
-    assert r2 is None and len(calls) == 1
-    # different partition still runs
-    manifest.run_stage(spark, mpath, "extract", "file_b", work)
-    assert len(calls) == 2
-    # pending_keys reports only unseen keys
-    keys = spark.createDataFrame([Row(partition_key=k) for k in ["file_a", "file_b", "file_c"]])
+    manifest.append_manifest(
+        spark, mpath,
+        [{"stage": "extract", "partition_key": k, "input_fingerprint": "fp",
+          "rows_in": 10, "rows_out": 20, "wall_ms": 5} for k in ("file_a", "file_b")],
+    )
+    # pending_keys reports only unseen keys: done keys with the same input
+    # fingerprint are skipped, no recompute
+    keys = spark.createDataFrame(
+        [Row(partition_key=k, fp="fp") for k in ["file_a", "file_b", "file_c"]]
+    )
     pending = {r.partition_key for r in manifest.pending_keys(spark, mpath, "extract", keys).collect()}
     assert pending == {"file_c"}
     m = manifest.read_manifest(spark, mpath)

@@ -31,7 +31,7 @@ def test_pipeline_end_to_end(spark, tmp_path_factory, pages):
     out = str(tmp_path_factory.mktemp("wp_full"))
     stats = wp.run_web_pipeline(spark, pages, out, n_url_buckets=4)
     assert stats[wp.S1]["pending_buckets"] == 4
-    assert stats[wp.S3]["ran"] is True
+    assert stats[wp.S3]["delta_entities"] > 0
     assert stats[wp.S4]["new_triples"] > 0
 
     # store contains pattern triples AND canonical-entity mention triples
@@ -51,7 +51,7 @@ def test_pipeline_end_to_end(spark, tmp_path_factory, pages):
     # re-run: everything skipped, store unchanged
     stats2 = wp.run_web_pipeline(spark, pages, out, n_url_buckets=4)
     assert stats2[wp.S1]["pending_buckets"] == 0
-    assert stats2[wp.S3]["ran"] is False
+    assert stats2[wp.S3]["delta_entities"] == 0
     assert stats2[wp.S4]["new_triples"] == 0
     assert _store_key_set(spark, out) == keys
 
@@ -150,24 +150,76 @@ def test_s3_delta_adopts_and_assigns(spark, tmp_path):
     canonical (stability: old rows untouched), novels keep themselves —
     and the pass is idempotent (append-only via anti-join)."""
     linked_path, emap_path = str(tmp_path / "linked"), str(tmp_path / "emap")
+    sigs_path = str(tmp_path / "sigs")
     spark.createDataFrame(
-        [("image classification",), ("Image Classification",), ("machine translation",),
-         ("IMAGE classification",), ("quantum entanglement",)],
-        ["entity_id"],
-    ).write.parquet(linked_path)
-    spark.createDataFrame(
+        [("image classification", 0), ("Image Classification", 0), ("machine translation", 0),
+         ("IMAGE classification", 1), ("quantum entanglement", 1)],
+        ["entity_id", "url_bucket"],
+    ).write.partitionBy("url_bucket").parquet(linked_path)
+    emap = spark.createDataFrame(
         [("image classification", "image classification"),
          ("Image Classification", "image classification"),
          ("machine translation", "machine translation")],
         ["entity_id", "canonical_id"],
-    ).write.parquet(emap_path)
-    assert wp._run_canonicalize_delta(spark, linked_path, emap_path) == 2
+    )
+    emap.write.parquet(emap_path)
+    wp._entity_band_rows(
+        emap.select("entity_id", F.col("entity_id").alias("name"))
+    ).write.parquet(sigs_path)
+    assert wp._run_canonicalize_delta(spark, linked_path, emap_path, [0, 1], sigs_path) == 2
     m = {r.entity_id: r.canonical_id for r in spark.read.parquet(emap_path).collect()}
     assert m["IMAGE classification"] == "image classification"   # adopted
     assert m["quantum entanglement"] == "quantum entanglement"   # novel
     assert m["image classification"] == "image classification"   # old rows intact
     assert len(m) == 5
-    assert wp._run_canonicalize_delta(spark, linked_path, emap_path) == 0  # idempotent
+    # idempotent
+    assert wp._run_canonicalize_delta(spark, linked_path, emap_path, [0, 1], sigs_path) == 0
+
+
+def test_s3_first_run_equals_batch_canonicalization(spark, tmp_path):
+    """S3 has one path: its first run is the incremental pass over an
+    absent map and signature table. With nothing to adopt from, that pass
+    must produce exactly the batch operator's map (near-equal pairs merged,
+    a chain a—b—c merged through b although a and c are not near-equal)
+    and exactly the band rows of every entity as the signature table."""
+    from extremexp_knowledge_graph_spark.operators.canonicalize import canonicalize_entities
+    from extremexp_knowledge_graph_spark.plans import manifest
+    from extremexp_knowledge_graph_spark.schema import LINKED_SCHEMA, PAGES_SCHEMA
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    chain = [base, base + " lambda mu nu", base + " lambda mu nu xi omicron pi"]
+    forms = chain + [
+        "image classification task", "Image Classification Task",
+        "deep residual networks for image recognition",
+        "deep residual networks for image recognition tasks",
+        "quantum entanglement experiments",
+    ]
+    out = str(tmp_path / "wp")
+    spark.createDataFrame(
+        [(i, f, f, 1.0, i % 3) for i, f in enumerate(forms)], LINKED_SCHEMA
+    ).write.partitionBy("url_bucket").parquet(f"{out}/linked")
+    manifest.append_manifest(
+        spark, f"{out}/manifest",
+        [{"stage": wp.S2, "partition_key": str(b), "output_fingerprint": f"fp{b}"}
+         for b in range(3)],
+    )
+
+    no_pages = spark.createDataFrame([], PAGES_SCHEMA)
+    stats = wp.run_web_pipeline(spark, no_pages, out, stages=(wp.S3,))
+    assert stats[wp.S3]["delta_entities"] == len(forms)
+
+    ents = spark.createDataFrame([(f, f) for f in forms], ["entity_id", "name"])
+    batch = canonicalize_entities(
+        ents, threshold=wp.CANON_THRESHOLD, num_hashes=wp.CANON_NUM_HASHES,
+        bands=wp.CANON_BANDS, shingle_n=wp.CANON_SHINGLE_N,
+    )
+    got = {r.entity_id: r.canonical_id for r in spark.read.parquet(f"{out}/entity_map").collect()}
+    assert got == {r.entity_id: r.canonical_id for r in batch.collect()}
+    # the fixture exercises merging: the chain and both pairs collapse
+    assert {got[f] for f in chain} == {min(chain)}
+    assert len(set(got.values())) == 4
+    sigs = sorted(map(tuple, spark.read.parquet(f"{out}/entity_sigs").collect()))
+    assert sigs == sorted(map(tuple, wp._entity_band_rows(ents).collect()))
 
 
 def test_s1_rerun_after_lost_manifest_does_not_duplicate(spark, tmp_path_factory, pages):
